@@ -28,46 +28,54 @@ per-task config files, the engine does with:
   entry and committed output exist; outputs are byte-stable because every
   generator/operator is a pure function of its input (no wall clock, no
   unseeded RNG — SURVEY §7.4.5)
-* **per-partition metrics** — a pass-through ``mapInPandas`` counts rows and
-  payload bytes per partition into an accumulator; the driver appends
-  ``(job_id, stage, partition_id, rows, bytes, wall_ms, ts)`` rows to the
-  metrics table (replaces ``metrics.py:13-88``'s OpenTelemetry histogram
-  with queryable lineage).
+* **per-partition metrics** — read from the committed part files (parquet
+  footer ``rows``, stored ``bytes``, ``part-NNNNN`` → ``partition_id``;
+  Iceberg: the ``files`` metadata table), so a stage runs as its own write
+  and nothing else. ``run_stage`` writes ``(job_id, stage, partition_id, rows,
+  bytes, wall_ms, ts)`` rows to ``metrics/part-<job>__<stage>.parquet``
+  before the ledger entry, which pins the output schema for every
+  read-back; a crash between the two re-runs the stage and overwrites that
+  file (replaces ``metrics.py:13-88``'s OpenTelemetry histogram).
 """
 
 from __future__ import annotations
 
 import json
 import os
+import re
 import shutil
 import time
 from dataclasses import dataclass
+from datetime import datetime, timezone
 from typing import Callable
 
 import pandas as pd
-from pyspark.accumulators import AccumulatorParam
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
-
-
-class _DictAccum(AccumulatorParam):
-    def zero(self, value):
-        return {}
-
-    def addInPlace(self, a, b):
-        for k, v in b.items():
-            if k in a:
-                a[k] = (a[k][0] + v[0], a[k][1] + v[1])
-            else:
-                a[k] = v
-        return a
-
+from pyspark.sql.types import StructType
 
 METRICS_SCHEMA = (
     "job_id string, stage string, partition_id int, rows long, bytes long, "
     "wall_ms double, ts timestamp"
 )
+_METRICS_ARROW = pa.schema([
+    ("job_id", pa.string()), ("stage", pa.string()), ("partition_id", pa.int32()),
+    ("rows", pa.int64()), ("bytes", pa.int64()), ("wall_ms", pa.float64()),
+    ("ts", pa.timestamp("us", tz="UTC")),
+])
 CHECKPOINT_SCHEMA = "job_id string, stage string, snapshot_id long, committed_at timestamp"
+_PART_ID = re.compile(r"^(?:part-)?(\d+)-")  # Spark part-00003-<uuid>…, Iceberg 00003-<task>-…
+
+
+def _atomic_write(path: str, write: Callable, mode: str = "w") -> None:
+    """Write through a hidden temp name, fsync, then rename into place."""
+    tmp = os.path.join(os.path.dirname(path), f".{os.path.basename(path)}.tmp")
+    with open(tmp, mode) as f:
+        write(f)
+        f.flush()
+        os.fsync(f.fileno())
+    os.rename(tmp, path)
 
 
 @dataclass
@@ -116,8 +124,13 @@ class _IcebergSnapshots:
     def committed(self, stage: str) -> bool:
         return self.spark.catalog.tableExists(self._table(stage))
 
-    def read(self, stage: str) -> DataFrame:
-        return self.spark.read.table(self._table(stage))
+    def read(self, stage: str, schema: StructType) -> DataFrame:
+        return self.spark.read.table(self._table(stage))  # the catalog holds the schema
+
+    def files(self, stage: str) -> list[tuple[str, int, int]]:
+        return [tuple(r) for r in self.spark.sql(
+            f"SELECT file_path, record_count, file_size_in_bytes FROM {self._table(stage)}.files"
+        ).collect()]
 
     def write(self, df: DataFrame, stage: str) -> int:
         tbl = self._table(stage)
@@ -139,8 +152,14 @@ class _ParquetSnapshots:
         out = self.p._stage_path(stage)
         return os.path.exists(os.path.join(out, "_SUCCESS"))
 
-    def read(self, stage: str) -> DataFrame:
-        return self.p.spark.read.parquet(self.p._stage_path(stage))
+    def read(self, stage: str, schema: StructType) -> DataFrame:
+        return self.p.spark.read.schema(schema).parquet(self.p._stage_path(stage))
+
+    def files(self, stage: str) -> list[tuple[str, int, int]]:
+        """(path, rows, stored bytes) of each committed part file."""
+        out = self.p._stage_path(stage)
+        paths = [os.path.join(out, f) for f in sorted(os.listdir(out)) if f.startswith("part-")]
+        return [(f, pq.read_metadata(f).num_rows, os.path.getsize(f)) for f in paths]
 
     def write(self, df: DataFrame, stage: str) -> int | None:
         out_path = self.p._stage_path(stage)
@@ -192,7 +211,7 @@ class Pipeline:
     def committed(self, stage: str) -> bool:
         return os.path.exists(self._ledger_path(stage)) and self._store.committed(stage)
 
-    def _commit(self, stage: str, wall_ms: float, part_metrics: dict,
+    def _commit(self, stage: str, wall_ms: float, schema: StructType,
                 snapshot_id: int | None = None) -> int:
         if snapshot_id is None:
             snapshot_id = len(os.listdir(self._ledger_dir)) + 1
@@ -202,70 +221,43 @@ class Pipeline:
             "snapshot_id": snapshot_id,
             "committed_at": time.time(),
             "wall_ms": wall_ms,
+            "schema": schema.jsonValue(),
         }
-        tmp = self._ledger_path(stage) + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(entry, f)
-            f.flush()
-            os.fsync(f.fileno())
-        os.rename(tmp, self._ledger_path(stage))  # atomic transition analog
-        self._append_metrics(stage, wall_ms, part_metrics)
+        _atomic_write(self._ledger_path(stage), lambda f: json.dump(entry, f))  # atomic transition analog
         return snapshot_id
 
-    def _append_metrics(self, stage: str, wall_ms: float, part_metrics: dict) -> None:
-        rows = [
-            {
-                "job_id": self.job_id,
-                "stage": stage,
-                "partition_id": int(pid),
-                "rows": int(cnt),
-                "bytes": int(nbytes),
-                "wall_ms": float(wall_ms),
-                "ts": pd.Timestamp.utcnow().tz_localize(None),
-            }
-            for pid, (cnt, nbytes) in sorted(part_metrics.items())
-        ] or [
-            {
-                "job_id": self.job_id,
-                "stage": stage,
-                "partition_id": -1,
-                "rows": 0,
-                "bytes": 0,
-                "wall_ms": float(wall_ms),
-                "ts": pd.Timestamp.utcnow().tz_localize(None),
-            }
-        ]
-        df = self.spark.createDataFrame(pd.DataFrame(rows), METRICS_SCHEMA)
-        df.coalesce(1).write.mode("append").parquet(os.path.join(self.warehouse, "metrics"))
+    def _write_metrics(self, stage: str, wall_ms: float) -> None:
+        """One row per partition of the committed output, written to a file
+        named by (job, stage) so that a re-run replaces it."""
+        parts: dict[int, tuple[int, int]] = {}
+        for path, rows, nbytes in self._store.files(stage):
+            pid = int(_PART_ID.match(os.path.basename(path)).group(1))
+            r, b = parts.get(pid, (0, 0))
+            parts[pid] = (r + rows, b + nbytes)
+        ts = datetime.now(timezone.utc)
+        table = pa.Table.from_pylist([
+            {"job_id": self.job_id, "stage": stage, "partition_id": pid, "rows": r,
+             "bytes": b, "wall_ms": wall_ms, "ts": ts}
+            for pid, (r, b) in sorted(parts.items())
+        ], schema=_METRICS_ARROW)
+        metrics_dir = os.path.join(self.warehouse, "metrics")
+        os.makedirs(metrics_dir, exist_ok=True)
+        path = os.path.join(metrics_dir, f"part-{self.job_id}__{stage}.parquet")
+        _atomic_write(path, lambda f: pq.write_table(table, f), "wb")
 
     # -------------------------------------------------------------- run
 
-    def _instrument(self, df: DataFrame, accum) -> DataFrame:
-        """Pass-through partition metering (rows + payload bytes)."""
-        schema = df.schema
-
-        def meter(iterator):
-            from pyspark import TaskContext
-
-            pid = TaskContext.get().partitionId()
-            for pdf in iterator:
-                nbytes = int(pdf.memory_usage(deep=True).sum())
-                accum.add({pid: (len(pdf), nbytes)})
-                yield pdf
-
-        return df.mapInPandas(meter, schema)
-
     def run_stage(self, stage: Stage, inp: DataFrame | None) -> DataFrame:
         if self.committed(stage.name):
-            return self._store.read(stage.name)
-        accum = self.spark.sparkContext.accumulator({}, _DictAccum())
+            with open(self._ledger_path(stage.name)) as f:
+                return self._store.read(stage.name, StructType.fromJson(json.load(f)["schema"]))
         t0 = time.time()
         out = stage.fn(inp)
-        out = self._instrument(out, accum)
         snapshot_id = self._store.write(out, stage.name)
         wall_ms = (time.time() - t0) * 1000.0
-        self._commit(stage.name, wall_ms, dict(accum.value), snapshot_id)
-        return self._store.read(stage.name)
+        self._write_metrics(stage.name, wall_ms)
+        self._commit(stage.name, wall_ms, out.schema, snapshot_id)
+        return self._store.read(stage.name, out.schema)
 
     def run(self, stages: list[Stage], source: DataFrame | None = None) -> DataFrame:
         cur = source
@@ -276,7 +268,7 @@ class Pipeline:
     # ----------------------------------------------------------- tables
 
     def metrics(self) -> DataFrame:
-        return self.spark.read.parquet(os.path.join(self.warehouse, "metrics"))
+        return self.spark.read.schema(METRICS_SCHEMA).parquet(os.path.join(self.warehouse, "metrics"))
 
     def checkpoints(self) -> DataFrame:
         entries = []
@@ -287,5 +279,6 @@ class Pipeline:
         pdf = pd.DataFrame(
             entries, columns=["job_id", "stage", "snapshot_id", "committed_at", "wall_ms"]
         ).sort_values("snapshot_id")
-        pdf["committed_at"] = pd.to_datetime(pdf["committed_at"], unit="s")
+        # whole microseconds, or Arrow refuses the cast and createDataFrame falls back
+        pdf["committed_at"] = pd.to_datetime(pdf["committed_at"], unit="s").dt.floor("us")
         return self.spark.createDataFrame(pdf[["job_id", "stage", "snapshot_id", "committed_at"]], CHECKPOINT_SCHEMA)
