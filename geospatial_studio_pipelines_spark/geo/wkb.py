@@ -119,6 +119,32 @@ def polygon_rings(buf: bytes) -> list[np.ndarray]:
     raise ValueError(f"not a polygon: type {gt}")
 
 
+def exterior_ring(buf: bytes) -> np.ndarray:
+    """``polygon_rings(buf)[0]`` without decoding the other rings: the
+    exterior of a POLYGON, or of the first non-empty MULTIPOLYGON member.
+    Raises ``ValueError`` for other geometry types and ``IndexError`` when
+    there is no ring, as that expression does. Bytes after the first ring
+    are not read, so damage there goes unnoticed."""
+    geom_type, off = _header(buf, 0)
+    if geom_type == POLYGON:
+        members = 1
+    elif geom_type == MULTIPOLYGON:
+        (members,) = struct.unpack_from("<I", buf, off)
+        off += 4
+    else:
+        raise ValueError(f"not a polygon: type {geom_type}")
+    for _ in range(members):
+        if geom_type == MULTIPOLYGON:
+            gt, off = _header(buf, off)
+            if gt != POLYGON:
+                raise ValueError(f"multipolygon member type {gt}")
+        (nrings,) = struct.unpack_from("<I", buf, off)
+        off += 4
+        if nrings:
+            return _read_ring(buf, off)[0]
+    raise IndexError("polygon has no rings")
+
+
 def envelope(buf: bytes) -> tuple[float, float, float, float]:
     """(minx, miny, maxx, maxy) of any supported geometry."""
     gt, payload = loads(buf)

@@ -126,8 +126,7 @@ def regularize(df: DataFrame, technique: str = "adaptive_regularization", geom_c
             outs = []
             for blob in pdf[geom_col]:
                 try:
-                    rings = wkb.polygon_rings(bytes(blob))
-                    outs.append(wkb.dumps_polygon([fn(rings[0])]))
+                    outs.append(wkb.dumps_polygon([fn(wkb.exterior_ring(bytes(blob)))]))
                 except (ValueError, IndexError):
                     outs.append(bytes(blob))  # pass through invalid geometry
             out = pdf.copy()

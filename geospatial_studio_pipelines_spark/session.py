@@ -19,6 +19,7 @@ Design notes (100 TB target):
 
 from __future__ import annotations
 
+import hashlib
 import os
 import shutil
 import tempfile
@@ -159,26 +160,33 @@ def _ship_package(spark: SparkSession) -> None:
     ``spark-submit --py-files``, north rule launch mode). Without it, UDF
     workers fail with ModuleNotFoundError whenever the driver script runs
     outside the repo directory."""
-    pkg_dir = os.path.dirname(os.path.abspath(__file__))
+    spark.sparkContext.addPyFile(_pyfiles_zip(os.path.dirname(os.path.abspath(__file__))))
+
+
+def _pyfiles_zip(pkg_dir: str) -> str:
+    """Zip of the package's ``.py`` files in $TMPDIR, named by a digest of
+    their relative paths and bytes: checkouts with different sources never
+    share a zip, and an unchanged package reuses the one already built."""
     pkg_name = os.path.basename(pkg_dir)
-    zip_path = os.path.join(tempfile.gettempdir(), f"{pkg_name}_pyfiles.zip")
-    newest_src = max(
-        os.path.getmtime(os.path.join(root, f))
-        for root, _dirs, files in os.walk(pkg_dir)
-        for f in files
-        if f.endswith(".py")
-    )
-    if not os.path.exists(zip_path) or os.path.getmtime(zip_path) < newest_src:
-        tmp = zip_path + ".tmp"
+    sources = {}
+    for root, _dirs, files in os.walk(pkg_dir):
+        for f in files:
+            if f.endswith(".py"):
+                full = os.path.join(root, f)
+                with open(full, "rb") as fh:
+                    sources[os.path.join(pkg_name, os.path.relpath(full, pkg_dir))] = fh.read()
+    digest = hashlib.sha256()
+    for rel in sorted(sources):
+        digest.update(f"{rel}\0{len(sources[rel])}\0".encode())
+        digest.update(sources[rel])
+    zip_path = os.path.join(tempfile.gettempdir(), f"{pkg_name}_pyfiles_{digest.hexdigest()[:16]}.zip")
+    if not os.path.exists(zip_path):
+        tmp = f"{zip_path}.{os.getpid()}.tmp"
         with zipfile.ZipFile(tmp, "w", zipfile.ZIP_DEFLATED) as zf:
-            for root, _dirs, files in os.walk(pkg_dir):
-                for f in files:
-                    if f.endswith(".py"):
-                        full = os.path.join(root, f)
-                        rel = os.path.join(pkg_name, os.path.relpath(full, pkg_dir))
-                        zf.write(full, rel)
+            for rel in sorted(sources):
+                zf.writestr(rel, sources[rel])
         os.replace(tmp, zip_path)
-    spark.sparkContext.addPyFile(zip_path)
+    return zip_path
 
 
 def _parallelism_of(master: str) -> int:

@@ -48,3 +48,24 @@ def test_sweep_keeps_everything_when_jvm_alive(tmp_path, monkeypatch):
 def test_any_java_alive_detects_this_test_process_absence():
     # deterministic contract: returns a bool and doesn't raise
     assert S._any_java_alive() in (True, False)
+
+
+def test_pyfiles_zip_is_keyed_by_package_content(tmp_path, monkeypatch):
+    """Two checkouts of the package with different sources ship different
+    zips, each holding its own source; equal sources share one zip."""
+    import tempfile
+    import zipfile
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    zips = {}
+    for name, body in (("a", "X = 1\n"), ("b", "X = 2\n"), ("c", "X = 1\n")):
+        pkg = tmp_path / name / "pkg"
+        (pkg / "sub").mkdir(parents=True)
+        (pkg / "__init__.py").write_text("")
+        (pkg / "sub" / "mod.py").write_text(body)
+        zips[name] = S._pyfiles_zip(str(pkg))
+    assert zips["a"] != zips["b"] and zips["a"] == zips["c"]
+    for name, body in (("a", "X = 1\n"), ("b", "X = 2\n")):
+        with zipfile.ZipFile(zips[name]) as zf:
+            assert sorted(zf.namelist()) == ["pkg/__init__.py", "pkg/sub/mod.py"]
+            assert zf.read("pkg/sub/mod.py").decode() == body

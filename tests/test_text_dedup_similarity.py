@@ -706,3 +706,25 @@ def test_jaccard_rejects_pair_ids_outside_corpus(spark):
     out = dedup.ngram_jaccard_pairs(docs, pairs=alien, threshold=0.0)
     with pytest.raises(Exception, match="not in the shingled corpus"):
         out.collect()
+
+
+def test_jaccard_empty_corpus_rejects_caller_pairs(spark):
+    """Caller-supplied pairs over an empty corpus name the missing ids
+    instead of failing on an index into the empty id array."""
+    docs = spark.createDataFrame([], "doc_id long, text string")
+    pairs = spark.createDataFrame([(0, 1)], "id_a long, id_b long")
+    out = dedup.ngram_jaccard_pairs(docs, pairs=pairs, threshold=0.0)
+    with pytest.raises(Exception, match="not in the shingled corpus"):
+        out.collect()
+
+
+def test_jaccard_rejects_unknown_string_pair_ids(spark):
+    """The string-id (dict) lookup raises the same message as the numeric one."""
+    docs = spark.createDataFrame(
+        [(f"d{i}", f"document number {i} with some text") for i in range(6)],
+        "doc_id string, text string",
+    )
+    pairs = spark.createDataFrame([("d0", "nope")], "id_a string, id_b string")
+    out = dedup.ngram_jaccard_pairs(docs, pairs=pairs, threshold=0.0)
+    with pytest.raises(Exception, match=r"pair ids \['nope'\] are not in the shingled corpus"):
+        out.collect()

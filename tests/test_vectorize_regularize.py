@@ -1,8 +1,13 @@
 """Raster→vector→raster round-trip and regularization behavior (FIXTURES T4)."""
 
-import numpy as np
+import time
 
-from geospatial_studio_pipelines_spark import datagen
+import _polygonize_reference as oracle
+import numpy as np
+import pandas as pd
+import pytest
+
+from geospatial_studio_pipelines_spark import contracts, datagen
 from geospatial_studio_pipelines_spark.codecs.image import decode_image
 from geospatial_studio_pipelines_spark.geo import geometry as G
 from geospatial_studio_pipelines_spark.geo import wkb
@@ -134,8 +139,6 @@ def test_connected_components_spiral_worst_case():
     """Perf regression guard: a snaking spiral (max component diameter) on a
     1200x1200 plane must label in seconds, not O(area x diameter) passes —
     the pre-union-find propagation took minutes here."""
-    import time
-
     h = w = 1200
     m = np.zeros((h, w), bool)
     x0, x1, y0, y1 = 0, w - 1, 0, h - 1
@@ -183,3 +186,174 @@ def test_connected_components_matches_bfs():
     for lab, ref in zip(labels[mm], seen[mm]):
         assert remap.setdefault(lab, ref) == ref  # same partition
     assert len(remap) == c
+
+
+def test_connected_components_snake_worst_case():
+    """Perf regression guard: every other column set, the columns joined
+    alternately at the top and bottom rows — one 1200-turn snake."""
+    h = w = 1200
+    m = np.zeros((h, w), bool)
+    m[:, ::2] = True
+    m[0, 1::4] = True
+    m[-1, 3::4] = True
+    t0 = time.time()
+    labels = vectorize.connected_components(m)
+    assert time.time() - t0 < 2.0
+    assert (labels[m] == 1).all() and (labels[~m] == 0).all()
+
+
+PINCH = np.array([[1, 1, 1, 1], [1, 0, 1, 1], [1, 1, 0, 1], [1, 1, 1, 1]], dtype=np.uint8)
+
+
+def test_pinch_vertex_splits_into_touching_holes():
+    """Two background pixels touching only at a corner are two holes that
+    share that vertex, not one self-touching ring."""
+    feats = vectorize.raster_to_polygons(PINCH, min_area=0.0)
+    assert len(feats) == 1 and feats[0]["area"] == 14.0
+    ext, *holes = feats[0]["rings"]
+    np.testing.assert_array_equal(ext, [[0, 0], [4, 0], [4, 4], [0, 4], [0, 0]])
+    assert sorted(G.ring_area(r) for r in holes) == [-1.0, -1.0]
+    assert {tuple(v) for v in holes[0][:-1]} & {tuple(v) for v in holes[1][:-1]} == {(2.0, 2.0)}
+
+
+def _random_masks(n: int, seed: int):
+    """Seeded random masks, up to 24x24, foreground density 0.2-0.9."""
+    rng = np.random.default_rng(seed)
+    for _ in range(n):
+        h, w = rng.integers(1, 25, 2)
+        yield rng.random((h, w)) < rng.uniform(0.2, 0.9)
+
+
+def test_polygonize_random_masks_round_trip():
+    """Every mask, pinches included: polygon areas sum to the pixel count,
+    rasterizing the polygons gives the mask back, no ring repeats a vertex."""
+    for i, m in enumerate(_random_masks(1000, seed=11)):
+        feats = vectorize.raster_to_polygons(m.astype(np.uint8), min_area=0.0)
+        assert sum(G.polygon_area(f["rings"]) for f in feats) == m.sum(), i
+        assert all(f["area"] == G.polygon_area(f["rings"]) for f in feats), i
+        for f in feats:
+            for r in f["rings"]:
+                assert (r[0] == r[-1]).all() and len(np.unique(r[:-1], axis=0)) == len(r) - 1, i
+        back = vectorize.rasterize_polygons(
+            [(f["rings"], 1.0) for f in feats], m.shape, all_touched=False
+        )
+        np.testing.assert_array_equal(back > 0, m, err_msg=str(i))
+
+
+def _polys(fn, plane, min_area):
+    return [
+        (f["class"], wkb.dumps_polygon(f["rings"]), f["area"])
+        for f in fn(plane, 0.0, min_area)
+    ]
+
+
+def _assert_matches_reference(plane, min_area):
+    """Equal labels, and equal (class, WKB, area) unless the reference
+    raises on a pinch vertex; returns whether the polygons were compared."""
+    mask = (plane[:, :, 0] if plane.ndim == 3 else plane) > 0
+    np.testing.assert_array_equal(
+        vectorize.connected_components(mask), oracle.connected_components(mask)
+    )
+    try:
+        want = _polys(oracle.raster_to_polygons, plane, min_area)
+    except KeyError:
+        return False
+    assert _polys(vectorize.raster_to_polygons, plane, min_area) == want
+    return True
+
+
+def test_polygons_match_reference_on_label_fixtures():
+    for i in range(0, 160, 10):
+        assert _assert_matches_reference(decode_image(datagen.label_row(i)["label_bytes"]), 1.0)
+
+
+def test_polygons_match_reference_on_random_masks():
+    """Byte-identical WKB, areas and labels wherever the sequential tracer
+    returns (it raises KeyError on pinch vertices); trace_component also
+    matches on whole masks traced as one region."""
+    compared = traced = 0
+    for m in _random_masks(2500, seed=5):
+        compared += _assert_matches_reference(m.astype(np.uint8), 1.0)
+        try:
+            want = oracle.trace_component(m)
+        except KeyError:
+            continue
+        got = vectorize.trace_component(m)
+        assert len(got) == len(want)
+        assert all(np.array_equal(a, b) for a, b in zip(got, want))
+        traced += 1
+    assert compared >= 1000 and traced >= 300
+
+
+def test_image_pipeline_polygons_match_reference(spark, monkeypatch):
+    """The vectorize stage on the final masks of q_image_pipeline's chain
+    equals the sequential reference, row for row and byte for byte."""
+    stage, final = vectorize.vectorize, []
+
+    def spy(df, *args, **kwargs):
+        final.append(df)
+        return stage(df, *args, **kwargs)
+
+    monkeypatch.setattr(vectorize, "vectorize", spy)
+    contracts.q_image_pipeline(spark, None)
+    masks = final[0].select("image_id", "final_bytes").toPandas()
+    assert len(masks) > 0
+    got = (
+        stage(spark.createDataFrame(masks), in_col="final_bytes", min_area=4.0)
+        .toPandas()
+        .sort_values(["image_id", "shape_idx"])
+    )
+    want = []
+    for image_id, blob in zip(masks["image_id"], masks["final_bytes"]):
+        plane = decode_image(bytes(blob))
+        assert _assert_matches_reference(plane, 4.0)
+        want += [(image_id, k, *p) for k, p in enumerate(_polys(oracle.raster_to_polygons, plane, 4.0))]
+    assert want
+    assert [
+        (r.image_id, r.shape_idx, r["class"], bytes(r.geom_wkb), r.area_px) for _, r in got.iterrows()
+    ] == sorted(want)
+
+
+_SQUARE = np.array([[0, 0], [10, 0], [10, 10], [0, 10], [0, 0]], dtype=float)
+_HOLE = np.array([[2, 2], [2, 4], [4, 4], [4, 2], [2, 2]], dtype=float)
+_POLYGONS = [
+    wkb.dumps_polygon([_SQUARE, _HOLE, _HOLE + 4]),
+    wkb.dumps_multipolygon([[_SQUARE + 20], [_SQUARE, _HOLE]]),
+    wkb.dumps_multipolygon([[], [_SQUARE * 2, _HOLE]]),
+]
+_NOT_POLYGONS = [
+    wkb.dumps_point(1.0, 2.0),
+    wkb.dumps_linestring(_SQUARE),
+    wkb.dumps_polygon([]),
+    wkb.dumps_multipolygon([]),
+    wkb.dumps_multipolygon([[], []]),
+    b"\x01\x07\x00\x00\x00\x00\x00\x00\x00",  # geometry collection
+]
+
+
+def test_exterior_ring_matches_first_polygon_ring():
+    for blob in _POLYGONS:
+        np.testing.assert_array_equal(wkb.exterior_ring(blob), wkb.polygon_rings(blob)[0])
+    for blob in _NOT_POLYGONS:
+        with pytest.raises((ValueError, IndexError)) as want:
+            wkb.polygon_rings(blob)[0]
+        with pytest.raises(want.type):
+            wkb.exterior_ring(blob)
+
+
+def test_regularize_output_unchanged_for_holes_multipolygons_and_invalid(spark):
+    """reg_wkb is what regularizing the first decoded ring gave, and invalid
+    geometry still passes through."""
+    m = np.ones((8, 8), bool)
+    m[2:4, 2:4] = m[5, 5] = False
+    blobs = [wkb.dumps_polygon(vectorize.trace_component(m))] + _POLYGONS + _NOT_POLYGONS
+    df = spark.createDataFrame(pd.DataFrame({"k": range(len(blobs)), "geom_wkb": blobs}))
+    got = regularize.regularize(df).toPandas().sort_values("k")
+    want = []
+    for blob in blobs:
+        try:
+            rings = wkb.polygon_rings(blob)
+            want.append(wkb.dumps_polygon([regularize.adaptive_regularization(rings[0])]))
+        except (ValueError, IndexError):
+            want.append(blob)
+    assert [bytes(b) for b in got["reg_wkb"]] == want
