@@ -39,6 +39,7 @@ import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ._compaction import compact
 from .similarity import _rank_topk, ivf_centroids, with_ivf_bucket
 
 #: sidecar dir name — leading underscore keeps it invisible to parquet scans
@@ -107,67 +108,20 @@ def append_ivf_index(new_emb: DataFrame, path: str) -> None:
 
 
 def compact_ivf_index(spark: SparkSession, path: str) -> dict:
-    """Rewrite each inverted list's parquet files in place, collapsing
-    append debris (every :func:`append_ivf_index` adds one-plus files per
-    touched list; daily ingest cycles accumulate small files until the
-    pruned probe scan pays per-file open overhead on hundreds of shards per
-    list). Layout, sidecar, and probe results are unchanged — only the file
-    count per ``list=`` directory drops.
+    """Rewrite each ``list=`` dir's append debris (one-plus files per touched
+    list per :func:`append_ivf_index`) into ~one file; layout, sidecar and
+    probe results are unchanged. Snapshot → rewrite → swap per dir
+    (``_compaction.compact``; appends landing meanwhile are kept once).
+    Returns ``{files_before, files_after, rows}``."""
+    nlist = _load_meta(spark, path)[0]["nlist"]
 
-    Same staging-then-swap mechanics as
-    ``hamming_index.compact_hamming_index`` (Hadoop FS API, any scheme;
-    the swap is per-list delete-then-rename — on a metastore deployment
-    this is the transactional rewrite-files commit). Returns
-    ``{files_before, files_after, rows}``."""
-    meta, _ = _load_meta(spark, path)
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path
-    fs = hpath(path).getFileSystem(spark._jsc.hadoopConfiguration())
+    def rewrite(df: DataFrame, staging: str) -> None:
+        # each task owns whole lists → one output file per list= dir
+        df.repartition(nlist, "list").write.partitionBy("list").mode(
+            "overwrite"
+        ).parquet(staging)
 
-    def _list_dirs():
-        return [
-            st.getPath() for st in fs.listStatus(hpath(path))
-            if st.isDirectory() and st.getPath().getName().startswith("list=")
-        ]
-
-    def _part_files(d):
-        return [
-            st.getPath() for st in fs.listStatus(d)
-            if st.isFile() and st.getPath().getName().startswith("part-")
-        ]
-
-    before = {str(d): _part_files(d) for d in _list_dirs()}
-    staging = path.rstrip("/") + "__compacting"
-    fs.delete(hpath(staging), True)
-    df = spark.read.parquet(path)
-    rows = df.count()
-    # one output file per list: repartition on the partition column so each
-    # task owns whole lists (the write splits them back into list= dirs)
-    df.repartition(meta["nlist"], "list").write.partitionBy("list").mode(
-        "overwrite"
-    ).parquet(staging)
-    n_before = sum(len(v) for v in before.values())
-    n_after = 0
-    for d in _list_dirs():
-        name = d.getName()
-        staged = hpath(staging + "/" + name)
-        if not fs.exists(staged):
-            # no staged counterpart (empty after the compaction read, or a
-            # list= dir created by a concurrent append since the snapshot):
-            # retained old files stay live, so count them in files_after
-            n_after += len(_part_files(d))
-            continue
-        # .get(): the dir may postdate the `before` snapshot (concurrent
-        # append) — treat it as having no old files rather than KeyError
-        for f in before.get(str(d), []):
-            fs.delete(f, False)
-        for f in _part_files(staged):
-            dest = hpath(str(d) + "/" + f.getName())
-            if not fs.rename(f, dest):
-                raise IOError(f"IVF compaction swap failed: {f} -> {dest}")
-            n_after += 1
-    fs.delete(hpath(staging), True)
-    return {"files_before": n_before, "files_after": n_after, "rows": rows}
+    return compact(spark, path, rewrite)
 
 
 def probe_ivf_index(

@@ -288,6 +288,10 @@ def minhash_candidate_pairs(
 #: instead of OOMing the executors on an un-gated broadcast.
 SETS_BROADCAST_MAX_BYTES = 256 << 20
 
+#: gathered shingles per chunk of the jaccard kernel (plus at most one
+#: partner's set): bounds the ~5 int64 temporaries of a hot query doc.
+GATHER_MAX_ELEMS = 1 << 22
+
 
 def ngram_jaccard_pairs(
     docs: DataFrame,
@@ -395,6 +399,7 @@ def ngram_jaccard_pairs(
         #: before processing, so per-batch fixed costs amortize regardless
         #: of the session batch setting (guide §4.2 "keep batches large").
         FLUSH_PAIRS = 1 << 16
+        gather_cap = GATHER_MAX_ELEMS  # read on the driver, shipped by value
 
         def kernel(batches):
             import pyarrow as pa
@@ -434,11 +439,16 @@ def ngram_jaccard_pairs(
                 b_ix = lookup(ib_pa)
                 jac = np.empty(n, dtype=np.float64)
                 # group pairs by query doc: stamp its set once, then count
-                # membership over the partners' flat gather — O(Σ|B|) total
+                # membership over the partners' flat gather — O(Σ|B|) total.
+                # A hot doc's group is cut every gather_cap gathered
+                # shingles, bounding each chunk's temporaries.
                 order = np.argsort(a_ix, kind="stable")
                 sa = a_ix[order]
-                group_starts = np.flatnonzero(np.r_[True, sa[1:] != sa[:-1]])
-                bounds = np.r_[group_starts, n]
+                new_a = np.r_[True, sa[1:] != sa[:-1]]
+                lens = counts[b_ix[order]]
+                start = np.cumsum(lens) - lens
+                key = (start - np.maximum.accumulate(np.where(new_a, start, 0))) // gather_cap
+                bounds = np.r_[np.flatnonzero(new_a | np.r_[True, key[1:] != key[:-1]]), n]
                 for s0, e0 in zip(bounds[:-1], bounds[1:]):
                     gi = order[s0:e0]
                     a = sa[s0]
@@ -574,15 +584,6 @@ def embedding_near_dups(
         from .similarity import lsh_near_dup_pairs
 
         return lsh_near_dup_pairs(emb, threshold, id_col=id_col, vec_col=vec_col)
-    from .similarity import EMB_BROADCAST_MAX_BYTES
-
-    est = emb.agg(F.sum(F.size(vec_col) * 4 + 64)).first()[0] or 0
-    if est > EMB_BROADCAST_MAX_BYTES:
-        raise ValueError(
-            f"embedding_near_dups(method='brute'): table ≈{est >> 20} MiB "
-            f"exceeds the {EMB_BROADCAST_MAX_BYTES >> 20} MiB broadcast cap "
-            "— use method='lsh'"
-        )
     # vectorized Arrow kernel over the broadcast corpus (same device as
     # brute_force_topk): the kernel emits the unrounded sims for a provable
     # ≥ threshold−2e-6 superset; the exact Spark-side round+filter below
@@ -590,7 +591,9 @@ def embedding_near_dups(
     from .similarity import cosine_candidates_kernel
 
     cand = cosine_candidates_kernel(
-        emb, threshold=threshold, id_col=id_col, vec_col=vec_col
+        emb, threshold=threshold, id_col=id_col, vec_col=vec_col,
+        too_big="embedding_near_dups(method='brute'): table ≈{mib} MiB "
+        "exceeds the {cap} MiB broadcast cap — use method='lsh'",
     )
     return (
         cand.filter(F.col("id_a") < F.col("id_b"))

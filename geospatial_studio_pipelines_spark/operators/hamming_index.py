@@ -43,6 +43,7 @@ import itertools
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ._compaction import compact
 from .dedup import (
     _check_pigeonhole,
     _first_colliding_band,
@@ -240,6 +241,25 @@ def _same_location(a: str, b: str) -> bool:
     return (not auth_a) or (not auth_b) or auth_a == auth_b
 
 
+def _write_buckets(banded: DataFrame, buckets: int, table: str, path: str, mode: str) -> None:
+    """Postings → parquet bucketed and sorted by (band, key) at ``path``,
+    registered as ``table``. The explicit ``repartition(buckets, band,
+    key)`` uses the same murmur3 ``HashPartitioning`` as the bucket
+    assignment, so a bucket's rows land in few tasks (no
+    every-task-writes-every-bucket small-file explosion); the within-bucket
+    sort keeps (band, key) runs contiguous for compression and row-group
+    min/max stats."""
+    (
+        banded.repartition(buckets, "band", "key")
+        .write.format("parquet")
+        .bucketBy(buckets, "band", "key")
+        .sortBy("band", "key")
+        .option("path", path)
+        .mode(mode)
+        .saveAsTable(table)
+    )
+
+
 def write_hamming_index(
     df: DataFrame,
     table: str,
@@ -254,17 +274,10 @@ def write_hamming_index(
 ) -> None:
     """Band ``df``'s hash column and persist the postings as parquet
     bucketed AND sorted by ``(band, key)`` at ``path``, registered in the
-    session catalog as ``table``; write the geometry sidecar.
-
-    The explicit ``repartition(buckets, band, key)`` before the write uses
-    the same murmur3 ``HashPartitioning`` as the bucket assignment, so a
-    bucket's rows land in few tasks and the table avoids the
-    every-task-writes-every-bucket small-file explosion. Within-bucket
-    ``sortBy`` keeps (band, key) runs contiguous — better parquet
-    compression and row-group min/max stats for key-filtered scans. The
-    hot-bucket guard runs here, at build time, where a degenerate key
-    distribution (all-same-phash megacluster) should fail — not in every
-    probe."""
+    session catalog as ``table`` (``_write_buckets``); write the geometry
+    sidecar. The hot-bucket guard runs here, at build time, where a
+    degenerate key distribution (all-same-phash megacluster) should fail —
+    not in every probe."""
     if max_hamming is None:
         max_hamming = bands - 1
     spark = df.sparkSession
@@ -272,15 +285,7 @@ def write_hamming_index(
         df, hash_col, id_col=id_col, bits=bits, bands=bands,
         max_hamming=max_hamming, hot_bucket_limit=hot_bucket_limit,
     )
-    (
-        banded.repartition(buckets, "band", "key")
-        .write.format("parquet")
-        .bucketBy(buckets, "band", "key")
-        .sortBy("band", "key")
-        .option("path", path)
-        .mode("overwrite")
-        .saveAsTable(table)
-    )
+    _write_buckets(banded, buckets, table, path, "overwrite")
     meta = {
         "bits": bits, "bands": bands, "max_hamming": max_hamming,
         "buckets": buckets, "id_col": id_col, "hash_col": hash_col,
@@ -370,86 +375,33 @@ def append_hamming_index(df: DataFrame, table: str, path: str) -> None:
         # the probe-side join explosion loudly via this same guard
         hot_bucket_limit=None,
     )
-    (
-        banded.repartition(meta["buckets"], "band", "key")
-        .write.format("parquet")
-        .bucketBy(meta["buckets"], "band", "key")
-        .sortBy("band", "key")
-        .option("path", path)
-        .mode("append")
-        .saveAsTable(table)
-    )
+    _write_buckets(banded, meta["buckets"], table, path, "append")
 
 
 def compact_hamming_index(spark: SparkSession, table: str, path: str) -> dict:
-    """Rewrite the index's buckets in place, collapsing append debris.
-
-    Every :func:`append_hamming_index` adds ~``buckets`` new files (one per
-    written bucket); a daily ingest cycle accumulates small files until the
-    bucketed scan's per-file open/footer overhead dominates probe time.
-    Compaction rewrites each bucket's postings into a single sorted file —
-    identical layout (same bucket count, same (band, key) clustering, same
-    sidecar), so probe plans and results are unchanged; only the file count
-    drops back to ~``buckets``.
-
-    Mechanics: the postings are rewritten into a staging directory with the
-    SAME bucket spec, then swapped under ``path`` via the Hadoop FileSystem
-    API (works on any scheme Spark can reach). Bucket identity lives in the
-    part-file NAME (``..._00042.c000``), so moved files keep their bucket
-    mapping. The swap is delete-then-rename — not atomic; on a metastore
-    deployment this step is the transactional table swap (Iceberg/Delta
-    rewrite-files commit), and here a concurrent probe during the swap may
-    fail loudly and retry. The sidecar is untouched. Returns stats
-    ``{files_before, files_after, rows}``."""
+    """Rewrite the index's buckets in place, collapsing append debris: each
+    :func:`append_hamming_index` adds ~``buckets`` files, and per-file open
+    overhead comes to dominate probes. Each bucket's postings become one
+    sorted file with the SAME bucket spec and sidecar, so probe plans and
+    results are unchanged. Snapshot → rewrite via a staging table → swap
+    (``_compaction.compact``; appends landing meanwhile are kept once).
+    Bucket identity lives in the part-file NAME (``..._00042.c000``), so
+    moved files keep their bucket. Returns ``{files_before, files_after,
+    rows}``."""
     meta = register_hamming_index(spark, table, path)
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path
-    fs = hpath(path).getFileSystem(spark._jsc.hadoopConfiguration())
-
-    def _part_files(d):
-        it = fs.listStatus(hpath(d))
-        return [
-            st.getPath() for st in it
-            if st.isFile() and st.getPath().getName().startswith("part-")
-        ]
-
-    before = _part_files(path)
-    staging_path = path.rstrip("/") + "__compacting"
     staging_table = table + "__compacting"
-    fs.delete(hpath(staging_path), True)
-    spark.sql(f"DROP TABLE IF EXISTS {staging_table}")
-    # read the RAW parquet, not the catalog table: over the bucketed table
-    # the optimizer elides the repartition (bucketing already provides the
-    # distribution) and then auto-disables the bucketed scan, so the write
-    # runs on arbitrary file-grouped partitions and every task emits a file
-    # per bucket — the exact small-file debris compaction exists to remove.
-    # A plain scan keeps the explicit shuffle, aligning tasks 1:1 with
-    # buckets (~one output file each).
-    (
-        spark.read.parquet(path)
-        .repartition(meta["buckets"], "band", "key")
-        .write.format("parquet")
-        .bucketBy(meta["buckets"], "band", "key")
-        .sortBy("band", "key")
-        .option("path", staging_path)
-        .mode("overwrite")
-        .saveAsTable(staging_table)
-    )
-    rows = spark.table(staging_table).count()
-    spark.sql(f"DROP TABLE {staging_table}")  # external table: files remain
-    # swap: old part files out, compacted part files in (sidecar untouched)
-    for f in before:
-        fs.delete(f, False)
-    after = []
-    for f in _part_files(staging_path):
-        dest = hpath(path + "/" + f.getName())
-        if not fs.rename(f, dest):
-            raise IOError(f"compaction swap failed renaming {f} -> {dest}")
-        after.append(dest)
-    fs.delete(hpath(staging_path), True)
+
+    def rewrite(df: DataFrame, staging: str) -> None:
+        # ``df`` is the RAW parquet: over the bucketed table the optimizer
+        # elides the repartition, so every task would write every bucket
+        spark.sql(f"DROP TABLE IF EXISTS {staging_table}")
+        _write_buckets(df, meta["buckets"], staging_table, staging, "overwrite")
+        spark.sql(f"DROP TABLE {staging_table}")  # external: files remain
+
+    stats = compact(spark, path, rewrite)
     # refresh so the already-registered table sees the new file list
     spark.sql(f"REFRESH TABLE {table}")
-    return {"files_before": len(before), "files_after": len(after), "rows": rows}
+    return stats
 
 
 def probe_hamming_index(

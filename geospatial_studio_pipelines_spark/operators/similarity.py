@@ -44,6 +44,7 @@ def cosine_candidates_kernel(
     threshold: float | None = None,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
+    too_big: str = "cosine_candidates_kernel: ≈{mib} MiB exceeds the {cap} MiB broadcast cap",
 ) -> DataFrame:
     """All-pairs cosine against the broadcast corpus as ONE Arrow kernel →
     ``(id_a, id_b, cos_sim)`` with cos_sim the UNROUNDED double, pruned to a
@@ -59,20 +60,26 @@ def cosine_candidates_kernel(
     Bit-identity of the doubles themselves: dots and norms accumulate
     STRICTLY left-to-right over the vector index (one fused vector op per
     dimension — never a BLAS matmul, which reorders the summation), the
-    exact float walk of ``aggregate(zip_with(...))``; float32→float64 casts
-    are exact; the final dot/(√na·√nb) uses the same operation order. The
-    former plan evaluated that aggregate INTERPRETED per pair (higher-order
-    functions have no codegen) — measured ~4s for 4M pairs at 32 cores vs
-    ~1s for this kernel. A zero-norm vector raises ValueError up front —
+    exact float walk of ``aggregate(zip_with(...))``; vectors are read in
+    the column's own element type, widened exactly to float64; the final
+    dot/(√na·√nb) uses the same operation order. The former plan evaluated
+    that aggregate INTERPRETED per pair (higher-order functions have no
+    codegen) — measured ~4s for 4M pairs at 32 cores vs ~1s for this
+    kernel. A zero-norm vector raises ValueError up front —
     the same loud failure the former expression plan hit (ANSI
     DIVIDE_BY_ZERO), instead of silently emitting NaN sims whose
-    interaction with the top-k cutoff would drop genuine neighbors."""
-    import numpy as np
-
+    interaction with the top-k cutoff would drop genuine neighbors. Past
+    ``EMB_BROADCAST_MAX_BYTES`` it raises ValueError(``too_big``) before
+    collecting anything."""
+    dtypes = dict(emb.dtypes)
+    elem = np.float64 if dtypes[vec_col] == "array<double>" else np.float32
+    est = emb.agg(F.sum(F.size(vec_col) * np.dtype(elem).itemsize + 64)).first()[0] or 0
+    if est > EMB_BROADCAST_MAX_BYTES:
+        raise ValueError(too_big.format(mib=est >> 20, cap=EMB_BROADCAST_MAX_BYTES >> 20))
     rows = emb.select(id_col, vec_col).collect()
     n = len(rows)
     corpus = (
-        np.stack([np.asarray(r[1], dtype=np.float32) for r in rows]).astype(np.float64)
+        np.stack([np.asarray(r[1], dtype=elem) for r in rows]).astype(np.float64)
         if n
         else np.zeros((0, 1))
     )
@@ -93,7 +100,7 @@ def cosine_candidates_kernel(
         )
     sc = emb.sparkSession.sparkContext
     bc = sc.broadcast({"ids": ids_np, "corpus": corpus, "norms": nbr})
-    id_type = dict(emb.dtypes)[id_col]
+    id_type = dtypes[id_col]
     out_schema = f"id_a {id_type}, id_b {id_type}, cos_sim double"
     #: the (query-chunk × corpus) sim matrix is bounded to 2^21 doubles
     #: (16 MB) so a large gated corpus cannot blow task memory
@@ -110,7 +117,7 @@ def cosine_candidates_kernel(
                 continue
             qids = rb.column(0).to_numpy(zero_copy_only=False)
             qmat = np.stack(
-                [np.asarray(v, dtype=np.float32) for v in rb.column(1).to_pylist()]
+                [np.asarray(v, dtype=elem) for v in rb.column(1).to_pylist()]
             ).astype(np.float64)
             out_a, out_b, out_s = [], [], []
             for s0 in range(0, rb.num_rows, chunk):
@@ -171,13 +178,11 @@ def brute_force_topk(
     (``cosine_candidates_kernel``); only the per-query top-(k+ε) superset
     reaches the rank window, so the window shuffle carries ~k·n rows
     instead of n²."""
-    est = emb.agg(F.sum(F.size(vec_col) * 4 + 64)).first()[0] or 0
-    if est > EMB_BROADCAST_MAX_BYTES:
-        raise ValueError(
-            f"brute_force_topk: embedding table ≈{est >> 20} MiB exceeds the "
-            f"{EMB_BROADCAST_MAX_BYTES >> 20} MiB broadcast cap — use lsh_topk"
-        )
-    cand = cosine_candidates_kernel(emb, k=k, id_col=id_col, vec_col=vec_col)
+    cand = cosine_candidates_kernel(
+        emb, k=k, id_col=id_col, vec_col=vec_col,
+        too_big="brute_force_topk: embedding table ≈{mib} MiB exceeds the "
+        "{cap} MiB broadcast cap — use lsh_topk",
+    )
     w = Window.partitionBy("id_a").orderBy(F.col("cos_sim").desc(), F.col("id_b").asc())
     return (
         cand.select("id_a", "id_b", F.round("cos_sim", 6).alias("cos_sim"))

@@ -133,3 +133,90 @@ def test_compaction_preserves_probes_and_reduces_files(spark, emb, tmp_path_fact
     pf = pf[: pf.find("]") + 1]
     assert pf.startswith("PartitionFilters: [") and "list" in pf
     assert pf != "PartitionFilters: []"
+
+
+def _appended_index(emb, path):
+    ann_index.write_ivf_index(emb, path, nlist=8, dim=64)
+    ann_index.append_ivf_index(
+        emb.filter(F.col("vec_id") < 30).select(
+            (F.col("vec_id") + 10_000).alias("vec_id"), "embedding"
+        ),
+        path,
+    )
+
+
+def test_compaction_keeps_append_landing_after_snapshot(
+    spark, emb, tmp_path_factory, on_index_read
+):
+    """An append landing between the compaction's per-list file snapshot
+    and its rewrite read is kept exactly once (the directory read used to
+    rewrite the late files AND leave them in place): the index equals a
+    never-compacted twin — same rows, no vector twice, same probes."""
+    import shutil
+
+    base = tmp_path_factory.mktemp("ivf")
+    path, twin = str(base / "idx"), str(base / "twin")
+    _appended_index(emb, path)
+    shutil.copytree(path, twin)
+    late = emb.filter(F.col("vec_id") < 60).select(
+        (F.col("vec_id") + 20_000).alias("vec_id"), "embedding"
+    )
+    ann_index.append_ivf_index(late, twin)
+    snap_rows = spark.read.parquet(path).count()
+    on_index_read(path, lambda: ann_index.append_ivf_index(late, path))
+    stats = ann_index.compact_ivf_index(spark, path)
+    assert stats["rows"] == snap_rows
+    got = spark.read.parquet(path)
+    assert got.count() == spark.read.parquet(twin).count() == snap_rows + 60
+    assert got.groupBy("vec_id").count().filter("count > 1").count() == 0
+    queries = emb.limit(40).unionByName(late.limit(10))
+    assert _key(
+        ann_index.probe_ivf_index(spark, path, queries, k=5, nprobe=8).collect()
+    ) == _key(ann_index.probe_ivf_index(spark, twin, queries, k=5, nprobe=8).collect())
+
+
+def test_compaction_refuses_leftover_staging(spark, emb, tmp_path_factory):
+    """Staged part files left by a crashed swap may be the only copy of a
+    list's rows: compaction refuses, naming the remedy, and deletes
+    nothing."""
+    import glob
+    import shutil
+
+    path = str(tmp_path_factory.mktemp("ivf") / "idx")
+    _appended_index(emb, path)
+    staged_dir = path + "__compacting/list=0"
+    os.makedirs(staged_dir)
+    shutil.copy(sorted(glob.glob(f"{path}/list=0/part-*"))[0], staged_dir)
+    files = sorted(glob.glob(f"{path}/list=*/part-*"))
+    with pytest.raises(ValueError, match="still holds part files.*delete"):
+        ann_index.compact_ivf_index(spark, path)
+    assert len(glob.glob(f"{staged_dir}/part-*")) == 1
+    assert sorted(glob.glob(f"{path}/list=*/part-*")) == files
+
+
+def test_failed_rewrite_removes_its_staging(spark, emb, tmp_path_factory, monkeypatch):
+    """A rewrite that raises after staging files deletes its staging dir
+    before any swap, leaves the index untouched and re-raises; the next
+    compaction then succeeds."""
+    import glob
+
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    path = str(tmp_path_factory.mktemp("ivf") / "idx")
+    _appended_index(emb, path)
+    files = sorted(glob.glob(f"{path}/list=*/part-*"))
+    real = DataFrameWriter.parquet
+
+    def parquet(self, p, *a, **kw):
+        real(self, p, *a, **kw)
+        if p.endswith("__compacting"):
+            raise RuntimeError("injected rewrite failure")
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", parquet)
+    with pytest.raises(RuntimeError, match="injected"):
+        ann_index.compact_ivf_index(spark, path)
+    monkeypatch.undo()
+    assert not os.path.exists(path + "__compacting")
+    assert sorted(glob.glob(f"{path}/list=*/part-*")) == files
+    stats = ann_index.compact_ivf_index(spark, path)
+    assert stats["rows"] == emb.count() + 30 and stats["files_after"] <= 8

@@ -499,3 +499,104 @@ def test_append_compact_append_probe_lifecycle(spark, index_dir, tmp_path):
     assert got == want and len(got) >= 40
     spark.sql("DROP TABLE t_cyc")
     spark.sql("DROP TABLE t_plain")
+
+
+def _race_index(spark, table, d):
+    hamming_index.write_hamming_index(
+        _corpus(spark, 2000), table, d, hash_col="phash", bits=62, bands=4, buckets=8
+    )
+    batch = spark.range(2000, 2400).select(
+        F.col("id").alias("image_id"), _mix(F.col("id")).alias("phash")
+    )
+    hamming_index.append_hamming_index(batch, table, d)
+
+
+def test_compaction_keeps_append_landing_after_snapshot(
+    spark, index_dir, tmp_path, on_index_read
+):
+    """An append landing between the compaction's file snapshot and its
+    rewrite read is kept exactly once: the read names the snapshot files,
+    so the late files are neither rewritten nor deleted. The directory read
+    used to rewrite them AND leave them in place — every late posting
+    twice. The index must equal a never-compacted twin."""
+    import shutil
+
+    _race_index(spark, "t_race", index_dir)
+    twin_dir = str(tmp_path / "idx_twin")
+    shutil.copytree(index_dir, twin_dir)
+    late = spark.range(2400, 2800).select(
+        F.col("id").alias("image_id"), _mix(F.col("id")).alias("phash")
+    )
+    hamming_index.append_hamming_index(late, "t_race_twin", twin_dir)
+    snap_rows = spark.read.parquet(index_dir).count()
+    on_index_read(
+        index_dir,
+        lambda: hamming_index.append_hamming_index(late, "t_race", index_dir),
+    )
+    stats = hamming_index.compact_hamming_index(spark, "t_race", index_dir)
+    assert stats["rows"] == snap_rows
+    got = spark.read.parquet(index_dir)
+    assert got.count() == spark.read.parquet(twin_dir).count()
+    assert got.groupBy("image_id", "band").count().filter("count > 1").count() == 0
+    probe = _probe(spark, 40, 15).unionByName(
+        late.select((F.col("image_id") + 50_000_000).alias("image_id"), "phash")
+    )
+    res = {
+        name: {
+            tuple(r)
+            for r in hamming_index.probe_hamming_index(
+                spark, name, d, probe, probe_rows=455
+            ).collect()
+        }
+        for name, d in (("t_race", index_dir), ("t_race_twin", twin_dir))
+    }
+    assert res["t_race"] == res["t_race_twin"] and len(res["t_race"]) >= 440
+    spark.sql("DROP TABLE t_race")
+    spark.sql("DROP TABLE t_race_twin")
+
+
+def test_compaction_refuses_leftover_staging(spark, index_dir):
+    """Part files left in ``<path>__compacting`` may be the only copy of
+    rows a crashed swap already deleted from the index: compaction refuses,
+    naming the remedy, and leaves both the staging dir and the index be."""
+    import glob
+    import os
+    import shutil
+
+    _race_index(spark, "t_left", index_dir)
+    staging = index_dir + "__compacting"
+    os.makedirs(staging)
+    shutil.copy(sorted(glob.glob(f"{index_dir}/part-*"))[0], staging)
+    files = sorted(glob.glob(f"{index_dir}/part-*"))
+    with pytest.raises(ValueError, match="still holds part files.*delete"):
+        hamming_index.compact_hamming_index(spark, "t_left", index_dir)
+    assert len(glob.glob(f"{staging}/part-*")) == 1
+    assert sorted(glob.glob(f"{index_dir}/part-*")) == files
+    spark.sql("DROP TABLE t_left")
+
+
+def test_failed_rewrite_removes_its_staging(spark, index_dir, monkeypatch):
+    """A rewrite that raises after staging files deletes its staging dir
+    before any swap (so the next run is not refused), leaves the index
+    untouched, and re-raises; the next compaction then succeeds."""
+    import glob
+    import os
+
+    _race_index(spark, "t_fail", index_dir)
+    files = sorted(glob.glob(f"{index_dir}/part-*"))
+    real_sql = spark.sql
+
+    def sql(q, *a, **kw):
+        if q == "DROP TABLE t_fail__compacting":  # after the staged write
+            raise RuntimeError("injected rewrite failure")
+        return real_sql(q, *a, **kw)
+
+    monkeypatch.setattr(spark, "sql", sql)
+    with pytest.raises(RuntimeError, match="injected"):
+        hamming_index.compact_hamming_index(spark, "t_fail", index_dir)
+    monkeypatch.undo()
+    assert not os.path.exists(index_dir + "__compacting")
+    assert sorted(glob.glob(f"{index_dir}/part-*")) == files
+    stats = hamming_index.compact_hamming_index(spark, "t_fail", index_dir)
+    assert stats["rows"] == 2400 * 4 and stats["files_after"] <= 8
+    spark.sql("DROP TABLE t_fail")

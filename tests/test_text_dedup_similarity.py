@@ -728,3 +728,70 @@ def test_jaccard_rejects_unknown_string_pair_ids(spark):
     out = dedup.ngram_jaccard_pairs(docs, pairs=pairs, threshold=0.0)
     with pytest.raises(Exception, match=r"pair ids \['nope'\] are not in the shingled corpus"):
         out.collect()
+
+
+def test_cosine_kernel_gates_before_collecting_corpus(spark, emb, monkeypatch):
+    """A DIRECT kernel call over the broadcast cap raises before any job
+    collects the corpus (the gate used to live only in the two callers,
+    leaving the kernel's own collect ungated)."""
+    from pyspark.sql import DataFrame
+
+    real = DataFrame.collect
+    collected = []
+
+    def collect(self):
+        collected.append(self.columns)
+        return real(self)
+
+    monkeypatch.setattr(similarity, "EMB_BROADCAST_MAX_BYTES", 0)
+    monkeypatch.setattr(DataFrame, "collect", collect)
+    with pytest.raises(ValueError, match="cosine_candidates_kernel: .* broadcast cap"):
+        similarity.cosine_candidates_kernel(emb.select("vec_id", "embedding"), k=3)
+    assert collected == []  # the corpus collect never ran
+
+
+def test_cosine_kernel_keeps_double_precision(spark):
+    """array<double> embeddings are read as doubles: two candidates that
+    are equal in float32 but not in float64 keep distinct, exact sims."""
+    b1, b2 = [1.0, 1e-3], [1.0, 1e-3 + 1e-11]
+    assert np.float32(b1[1]) == np.float32(b2[1])  # float32 would merge them
+    rows = [(0, [1.0, 0.0]), (1, b1), (2, b2)]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    got = {
+        (r.id_a, r.id_b): r.cos_sim
+        for r in similarity.cosine_candidates_kernel(df, threshold=-1.0).collect()
+    }
+
+    def cos(a, b):  # the kernel's left-to-right float64 walk
+        dot = na = nb = 0.0
+        for x, y in zip(a, b):
+            dot, na, nb = dot + x * y, na + x * x, nb + y * y
+        return dot / (np.sqrt(na) * np.sqrt(nb))
+
+    vec = dict(rows)
+    assert got == {(a, b): cos(vec[a], vec[b]) for a in vec for b in vec if a != b}
+    assert got[(0, 1)] != got[(0, 2)]
+
+
+def test_jaccard_hot_document_sub_chunks_match_uncapped(spark, monkeypatch):
+    """A hot query doc paired with many long partners is processed in
+    sub-chunks of ≤ GATHER_MAX_ELEMS gathered shingles; the jaccards must be
+    identical to the uncapped run."""
+    text = " ".join(f"w{i}" for i in range(60))
+    docs = spark.createDataFrame(
+        [(0, text)] + [(i, text[: 40 + 3 * i] + f" tail{i}") for i in range(1, 120)],
+        "doc_id long, text string",
+    )
+    pairs = spark.createDataFrame(
+        [(0, i) for i in range(1, 120)] + [(5, 7), (9, 3)], "id_a long, id_b long"
+    )
+
+    def run():
+        out = dedup.ngram_jaccard_pairs(docs, pairs=pairs, threshold=0.0)
+        return [tuple(r) for r in out.collect()]
+
+    want = run()
+    monkeypatch.setattr(dedup, "GATHER_MAX_ELEMS", 50)
+    got = run()
+    assert got == want and len(want) == 121
+    assert len({j for _, _, j in want}) > 50  # distinct partner overlaps
